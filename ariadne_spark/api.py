@@ -21,6 +21,7 @@ All functions return DataFrames (composable, lazily planned).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -221,7 +222,9 @@ def neighborhood(
     for dname, e in (("out", out_e), ("in", in_e)):
         if direction not in (dname, "both"):
             continue
-        frontier = spark.createDataFrame([(image_id,)], "node string")
+        frontier = spark.createDataFrame(
+            pa.table({"node": pa.array([image_id], pa.string())})
+        )
         visited = frontier.withColumn("min_depth", F.lit(0))
         for d in range(1, depth + 1):
             frontier = (
@@ -255,8 +258,11 @@ def lineage_report(store) -> "DataFrame":
     spark = store.spark
     if not rows:
         return spark.createDataFrame(
-            [], "stage string, n_partitions long, n_rows long, "
-            "wall_ms_min double, wall_ms_max double, wall_ms_total double"
+            pa.schema([
+                ("stage", pa.string()), ("n_partitions", pa.int64()),
+                ("n_rows", pa.int64()), ("wall_ms_min", pa.float64()),
+                ("wall_ms_max", pa.float64()), ("wall_ms_total", pa.float64()),
+            ]).empty_table()
         )
     pdf = pd.DataFrame(rows)
     agg = (
@@ -292,11 +298,11 @@ def query_stats(store) -> DataFrame:
     import os
 
     path = f"{store.root}/query_log.jsonl"
-    rows = []
+    tools = []
     if os.path.exists(path):
         with open(path) as fh:
-            rows = [(json.loads(line)["tool"],) for line in fh if line.strip()]
-    df = store.spark.createDataFrame(rows, "tool string")
+            tools = [json.loads(line)["tool"] for line in fh if line.strip()]
+    df = store.spark.createDataFrame(pa.table({"tool": pa.array(tools, pa.string())}))
     return (
         df.groupBy("tool")
         .agg(F.count("*").alias("n_calls"))

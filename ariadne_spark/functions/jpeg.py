@@ -985,6 +985,13 @@ _WAVE_MAX_MCUS_PER_INTERVAL = 16
 _WAVE_MIN_INTERVALS = 16
 
 
+def _require_intervals(intervals, n_int: int) -> None:
+    """Every entropy walk's shared error contract: a stream carrying
+    fewer RST intervals than its MCU geometry implies was cut short."""
+    if len(intervals) < n_int:
+        raise ValueError("truncated entropy stream")
+
+
 def _decode_scan(scan, intervals, qtables, huff, h, w, restart, hmax_g, vmax_g):
     """Entropy decode dispatcher, bit-identical to the per-bit
     reference twin `_decode_scan_loop` on every stream (adversarial
@@ -1044,6 +1051,7 @@ def _decode_scan_walk(scan, intervals, qtables, huff, h, w, restart, hmax_g, vma
     n_mcus = mrows * mcols
     step = restart if restart else n_mcus
     n_int = -(-n_mcus // step)
+    _require_intervals(intervals, n_int)
 
     # -- per-component coefficient layout: one flat int64 array -------------
     comp_off: dict[int, int] = {}
@@ -1208,6 +1216,7 @@ def _decode_scan_waves(scan, intervals, qtables, huff, h, w, restart, hmax_g, vm
     n_mcus = mrows * mcols
     step = restart if restart else n_mcus
     n_int = -(-n_mcus // step)
+    _require_intervals(intervals, n_int)
 
     # per-component coefficient layout: one flat int64 array
     comp_off: dict[int, int] = {}
@@ -1588,9 +1597,11 @@ def _decode_scan_loop(scan, intervals, qtables, huff, h, w, restart, hmax_g, vma
             "bh": bh,
         }
     pred = {c["id"]: 0 for c, _, _ in scan}
+    n_mcus = mrows * mcols
+    _require_intervals(intervals, -(-n_mcus // restart) if restart else 1)
     reader = _BitReader(intervals[0])
     interval_idx = 0
-    for mi in range(mrows * mcols):
+    for mi in range(n_mcus):
         if restart and mi and mi % restart == 0:
             interval_idx += 1
             reader = _BitReader(intervals[interval_idx])

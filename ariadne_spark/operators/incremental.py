@@ -38,6 +38,7 @@ from __future__ import annotations
 import os
 import time
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -335,11 +336,6 @@ class SpatialPipeline:
                            self.store.current_snapshot_id("tiles_coarse") is None
                            else ["all"], t0)
 
-    def _stage_tiles(self, in_sid: int, keys: list[str] | None) -> None:
-        """Sequential form kept for heal paths and direct callers."""
-        self._stage_tiles_fine(in_sid, keys)
-        self._stage_tiles_coarse(in_sid, keys)
-
     def _run_stages(self, in_sid: int, keys: list[str] | None) -> None:
         # pip / knn / tiles_fine / tiles_coarse are independent given
         # images_indexed (tiles_coarse constructs the post-fine state
@@ -454,18 +450,21 @@ class SpatialPipeline:
         # plan may be expensive or not stable across evaluations — a
         # drifting plan would desynchronize all_dead from the merged rows.
         # Small deltas (the common case — this path is latency-bound on
-        # scheduling, not data) materialize to the DRIVER in one action:
-        # the ids/pks come for free and every later read is a local-
-        # relation scan, replacing [checkpoint job + ids-collect job]
-        # with one job. Larger deltas keep the executor-side checkpoint
-        # (take() only signals size; its rows are discarded on that
-        # path, so an unstable caller plan still materializes once).
+        # scheduling, not data) come to the driver as ONE Arrow collect
+        # and go back as an Arrow LocalRelation: the ids are read off
+        # the Arrow column, and every later read of the delta or of the
+        # dead-id list is a JVM-local scan. A pickled Python RDD
+        # (createDataFrame of a list) would instead start Python worker
+        # tasks on every read of these frames. Larger deltas keep the
+        # executor-side checkpoint (the collect only signals size; its
+        # rows are discarded on that path, so an unstable caller plan
+        # still materializes once).
         plan = changed.select(*META_COLS).withColumn("pk", _pk_col())
         small_cap = 10_000
-        rows = plan.take(small_cap + 1)
-        if len(rows) <= small_cap:
-            changed_meta = self.spark.createDataFrame(rows, plan.schema)
-            changed_ids = [r["image_id"] for r in rows]
+        delta = plan.limit(small_cap + 1).toArrow()
+        if delta.num_rows <= small_cap:
+            changed_meta = self.spark.createDataFrame(delta, plan.schema)
+            changed_ids = delta.column("image_id").to_pylist()
         else:
             changed_meta = plan.localCheckpoint()
             # the delta's ids let the old-pk lookup prune to exactly
@@ -475,7 +474,7 @@ class SpatialPipeline:
             ]
         all_dead = sorted(set(changed_ids) | set(deleted_ids or []))
         dead_ids = self.spark.createDataFrame(
-            [(i,) for i in all_dead], "image_id string"
+            pa.table({"image_id": pa.array(all_dead, pa.string())})
         )
         if not self._id_index_fresh(prev_sid):
             # stale sidecar (crash between images_indexed and id_index

@@ -115,6 +115,12 @@ def get_spark(
         # vs 8.4s for the same 300k-row decode at 32 threads)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # list files on the driver for up to 4096 paths (Spark default:
+        # 32). A store table has 4**PREFIX_RES = 64 partitions, so its
+        # reads span 43-63 dirs, and above 32 every read started a
+        # distributed listing job of one task per dir (0.4-1.5 s each,
+        # three of them on an incremental update's stage threads)
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # report bucketed-sorted scan ordering so colocated merge joins
@@ -129,9 +135,3 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -1881,8 +1881,11 @@ class SnapshotStore:
         if not paths:
             # every selected partition was deleted: empty frame, real schema
             assert m.schema_json, f"no partitions and no schema for {table}"
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            target = StructType.fromJson(json.loads(m.schema_json))
             df = self.spark.createDataFrame(
-                [], StructType.fromJson(json.loads(m.schema_json))
+                to_arrow_schema(target).empty_table(), target
             )
         elif m.schema_json:
             # serve the snapshot's COMMITTED schema, not a sampled file's

@@ -15,6 +15,23 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def no_python_rdd(spark, monkeypatch):
+    """Fails the test if any DataFrame is built from a driver-side Python
+    list: `createDataFrame(list)` always goes through
+    `SparkContext.parallelize`, and every read of the pickled Python RDD
+    it yields starts Python worker tasks. Driver-held rows must enter
+    Spark as Arrow/pandas LocalRelations instead."""
+
+    def refuse(*args, **kwargs):
+        raise AssertionError(
+            "SparkContext.parallelize called: driver-held rows must enter "
+            "Spark as an Arrow/pandas LocalRelation"
+        )
+
+    monkeypatch.setattr(spark.sparkContext, "parallelize", refuse)
+
+
 @pytest.fixture(scope="session")
 def data_dir(tmp_path_factory):
     d = tmp_path_factory.mktemp("synth")

@@ -1283,3 +1283,51 @@ def test_resolve_sid_tolerates_tag_dropped_mid_read(spark, tmp_path):
             st.read("t", snapshot_id="ghost").collect()
     finally:
         st.backend.read_text = real
+
+
+def test_update_and_neighborhood_build_no_python_rdd(
+    spark, tmp_path, no_python_rdd
+):
+    """The update and serve paths keep driver-held rows in the JVM: the
+    delta, the dead-id list and the neighborhood frontier are Arrow
+    LocalRelations, never pickled Python RDDs (whose every read starts
+    Python worker tasks)."""
+    from ariadne_spark.api import neighborhood
+
+    p = _pipeline(spark, tmp_path, "p")
+    p.full_build(_images(spark, np.arange(600)))
+    del_ids = [f"img_{i:08d}" for i in (5, 250)]
+    p.update(_modified_images(spark, np.arange(40, 60)), deleted_ids=del_ids)
+    assert p.store.read("images_indexed").count() == 598
+
+    knn = p.store.read("knn")
+    focus = knn.select("src_image_id").first()[0]
+    got = neighborhood(knn, focus, depth=2).collect()
+    assert got and all(r["image_id"] != focus for r in got)
+
+
+def test_store_read_of_many_partitions_lists_files_on_driver(spark, tmp_path):
+    """A read spanning more than Spark's default 32-path parallel-listing
+    threshold submits no Spark job: the files are listed on the driver,
+    not by a distributed listing job of one task per partition dir."""
+    from pyspark.sql import functions as F
+
+    st = SnapshotStore(spark, str(tmp_path / "s"))
+    df = spark.range(400).select(
+        F.col("id"), (F.col("id") % 48).cast("string").alias("k")
+    )
+    st.write_table(df, "t", key="k")
+    assert len(st.manifest("t").partitions) == 48
+
+    sc = spark.sparkContext
+    group = f"listing-{tmp_path.name}"
+    sc.setJobGroup(group, "store read")
+    try:
+        t = st.read("t")
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        # the group does see jobs this thread submits
+        assert t.count() == 400
+        assert sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)

@@ -404,6 +404,26 @@ def test_truncated_stream_still_raises_on_vectorized_path():
         decode_jpeg(cut + b"\xff\xd9")
 
 
+@pytest.mark.parametrize("path", ["walk", "waves", "loop"])
+def test_missing_restart_interval_raises_value_error_on_every_path(
+    path, monkeypatch
+):
+    """A restart-marked stream whose last interval is gone carries fewer
+    intervals than its MCU geometry implies: every entropy walk raises
+    the same ValueError, not an IndexError from the interval list."""
+    from ariadne_spark.functions import jpeg as J
+
+    rng = np.random.default_rng(14)
+    px = rng.integers(0, 256, size=(48, 64, 3), dtype=np.uint8)
+    data = encode_jpeg(px, 85, "420", restart_mcus=2)
+    last_rst = max(data.rfind(bytes([0xFF, 0xD0 + n])) for n in range(8))
+    assert last_rst > 0
+    cut = data[:last_rst] + data[data.rindex(b"\xff\xd9"):]
+    monkeypatch.setattr(J, "_decode_scan", getattr(J, f"_decode_scan_{path}"))
+    with pytest.raises(ValueError, match="truncated entropy stream"):
+        decode_jpeg(cut)
+
+
 # ---------------------------------------------------------------------------
 # progressive (SOF2) — encode/decode conformance
 # ---------------------------------------------------------------------------
